@@ -48,7 +48,7 @@ object Bench {
     spark.sparkContext.setLogLevel("WARN")
     // The clearCaches + noop-sink + -1-sentinel contract (and the
     // rationale for each choice) lives in BenchProtocol, shared with
-    // ScaleProbe and AbBench so the three measure identically.
+    // ScaleProbe and Probe so the three measure identically.
     def timeOnce(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
         : Double = BenchProtocol.timeOnce(spark, sfDir, fn)
     // One untimed global warmup before the loop: the first keys in

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** THE timing protocol, shared by [[Bench]], [[ScaleProbe]] and
-  * [[AbBench]] so all three measure under identical rules — the round-11
+  * [[Probe]] so all three measure under identical rules — the round-11
   * review found the clearCaches + noop-sink + error-sentinel contract
   * copied into three files and the variance-bound constants into two,
   * which meant a calibration change (as happened with the 0.2 → 0.4

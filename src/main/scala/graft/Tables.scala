@@ -60,43 +60,11 @@ object Tables {
     * nothing. Determinism: round-robin repartition sorts before
     * assignment (sortBeforeRepartition, Spark default), so the row →
     * partition map is a pure function of the scan order and re-runs are
-    * bit-identical. */
-  def fanOutSmallScan(df: DataFrame): DataFrame =
-    fanOutSmallScan(df, Int.MaxValue)
-
-  /** [[fanOutSmallScan]] with a per-SITE parts cap (r22): the default
-    * min(cores, 8) is tuned for tokenize/shingle kernels, but the
-    * heaviest expand/gram sites (q_profile's 3× countDistinct Expand,
-    * q_dup_ngrams' gram explode) sit PAST the memory-bandwidth knee
-    * already at 8-way — r21 measured their cpu_ns up 1.8-4× for flat
-    * wall. A site that knows its stage is bandwidth-bound caps lower;
-    * `spark.graft.fanout.parts` still overrides (min of the two). */
-  def fanOutSmallScan(df: DataFrame, maxParts: Int): DataFrame = {
-    val s = df.sparkSession
-    val ceiling = s.conf.getOption("spark.graft.fanout.smallScanBytes")
-      .map(_.toLong).getOrElse(FanOutSmallScanBytesDefault)
-    // min(cores, 8), conf-overridable: the stages this feeds (tokenize,
-    // gram explode, string building) are MEMORY-BANDWIDTH-bound, not
-    // ALU-bound — the r21 AbBench sweep measured wall flat beyond ~8-way
-    // while total CPU-seconds inflated superlinearly with thread count
-    // (4-way 2.3 s, 8-way 3.9 s, 16-way 7.7 s, 32-way 22 s CPU for the
-    // same q_substring_dedup work at walls within ±20%). Past the
-    // bandwidth knee, extra threads only stall on the same DRAM.
-    // an EXPLICIT conf wins over the site cap (it is the deploy-time /
-    // A/B override); only the default is capped per site
-    val parts = s.conf.getOption("spark.graft.fanout.parts")
-      .map(_.toInt)
-      .getOrElse(math.min(
-        math.min(s.sparkContext.defaultParallelism, 8), maxParts))
-    if (df.queryExecution.optimizedPlan.stats.sizeInBytes <=
-        BigInt(ceiling))
-      df.repartition(parts)
-    else df
-  }
-
-  /** [[fanOutSmallScan]] with the size DISPATCH taken from a different
-    * frame than the one being fanned. For a frame a few operators past
-    * the scan (a join, a collect_set aggregation) Catalyst's stat
+    * bit-identical.
+    *
+    * `sizeOf` takes the size dispatch from a different frame than the
+    * one being fanned (default: `df` itself). For a frame a few operators
+    * past the scan (a join, a collect_set aggregation) Catalyst's stat
     * estimate MULTIPLIES through the operators and lands above the
     * ceiling even when the true data is kilobytes — the r21 StageProbe
     * showed q_cooccurrence's pair expansion serialized on ONE task
@@ -105,16 +73,30 @@ object Tables {
     * upper-bounds the derived frame's rows (joins on a key subset and
     * per-key aggregation only shrink it), so dispatching on the scan is
     * sound: at warehouse scale the scan is over the ceiling and this is
-    * the identity, exactly as the single-frame form. */
-  def fanOutSmallScan(df: DataFrame, sizeOf: DataFrame): DataFrame = {
+    * the identity.
+    *
+    * `maxParts` is a per-SITE parts cap (r22): the default min(cores, 8)
+    * is tuned for tokenize/shingle kernels, but the heaviest expand/gram
+    * sites (q_profile's 3× countDistinct Expand, q_dup_ngrams' gram
+    * explode) sit PAST the memory-bandwidth knee already at 8-way — r21
+    * measured their cpu_ns up 1.8-4× for flat wall. A site that knows its
+    * stage is bandwidth-bound caps lower. */
+  def fanOutSmallScan(df: DataFrame, sizeOf: Option[DataFrame] = None,
+      maxParts: Int = Int.MaxValue): DataFrame = {
     val s = df.sparkSession
     val ceiling = s.conf.getOption("spark.graft.fanout.smallScanBytes")
       .map(_.toLong).getOrElse(FanOutSmallScanBytesDefault)
-    val parts = s.conf.getOption("spark.graft.fanout.parts")
-      .map(_.toInt)
-      .getOrElse(math.min(s.sparkContext.defaultParallelism, 8))
-    if (sizeOf.queryExecution.optimizedPlan.stats.sizeInBytes <=
-        BigInt(ceiling))
+    // min(cores, 8): the stages this feeds (tokenize, gram explode,
+    // string building) are MEMORY-BANDWIDTH-bound, not ALU-bound — the
+    // r21 AbBench sweep measured wall flat beyond ~8-way while total
+    // CPU-seconds inflated superlinearly with thread count (4-way 2.3 s,
+    // 8-way 3.9 s, 16-way 7.7 s, 32-way 22 s CPU for the same
+    // q_substring_dedup work at walls within ±20%). Past the bandwidth
+    // knee, extra threads only stall on the same DRAM.
+    val parts = math.min(
+      math.min(s.sparkContext.defaultParallelism, 8), maxParts)
+    if (sizeOf.getOrElse(df).queryExecution.optimizedPlan.stats
+        .sizeInBytes <= BigInt(ceiling))
       df.repartition(parts)
     else df
   }

@@ -168,7 +168,7 @@ object Aggregates {
     // 4-way — r21's 8-way fan-out ran this key's cpu_ns to ~3-4× for
     // a modest wall gain; the cap keeps the wall at near-serial CPU
     // (A/B'd, see OPTIMIZATION_r22.md)
-    val agg = fanOutSmallScan(orders(s, d), 4).agg(
+    val agg = fanOutSmallScan(orders(s, d), maxParts = 4).agg(
       count(lit(1)).as("n"),
       sum(when(col("o_orderstatus").isNull, 1L).otherwise(0L)).as("null_s"),
       countDistinct(col("o_orderstatus")).as("nd_s"),

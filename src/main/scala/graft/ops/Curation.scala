@@ -330,7 +330,7 @@ object Curation {
     // 4-way — r21's 8-way fan-out ran this key's cpu_ns to 1.8× its
     // serial form for flat wall; the cap buys the same wall at near-
     // serial CPU (A/B'd, see OPTIMIZATION_r22.md)
-    val grams = fanOutSmallScan(documents(s, d), 4)
+    val grams = fanOutSmallScan(documents(s, d), maxParts = 4)
       .select(col("doc_id"), Text.toks(col("text")).as("tk"))
       .where(size(col("tk")) >= n)
       .select(col("doc_id"), size(col("tk")).cast("long").as("n_tok"),

@@ -4938,31 +4938,20 @@ object Layout {
       // job instead of two, halving this verb's probe-phase job floor.
       // The union rides a tagged 4-column shape; the uniqueness row is
       // the one with a NULL file name (input_file_name() is never NULL
-      // on a file scan). Conf-dispatched so both forms stay A/B-able;
-      // result-identical by construction: the same two subtrees
-      // evaluate either way, only the number of driver actions changes.
-      val fuseProbe = spark.conf.getOption("spark.graft.merge.fusedprobe")
-        .forall(_ == "true")
-      val (nTotal, nDistinct, nNulls, affNames) =
-        if (fuseProbe) {
-          val rows = controlPlane(spark) {
-            uniq.select(lit(null).cast("string").as("__f"),
-                col("n"), col("k"), col("nulls"))
-              .unionByName(affectedNames.select(col("__f"),
-                lit(null).cast("long").as("n"),
-                lit(null).cast("long").as("k"),
-                lit(null).cast("long").as("nulls")))
-              .collect()
-          }
-          val (us, as) = rows.partition(_.isNullAt(0))
-          (us.head.getLong(1), us.head.getLong(2), us.head.getLong(3),
-            as.toSeq.map(_.getString(0)))
-        } else {
-          val r = controlPlane(spark)(uniq.head)
-          (r.getLong(0), r.getLong(1), r.getLong(2),
-            controlPlane(spark)(affectedNames.collect())
-              .toSeq.map(_.getString(0)))
-        }
+      // on a file scan).
+      val rows = controlPlane(spark) {
+        uniq.select(lit(null).cast("string").as("__f"),
+            col("n"), col("k"), col("nulls"))
+          .unionByName(affectedNames.select(col("__f"),
+            lit(null).cast("long").as("n"),
+            lit(null).cast("long").as("k"),
+            lit(null).cast("long").as("nulls")))
+          .collect()
+      }
+      val (us, as) = rows.partition(_.isNullAt(0))
+      val (nTotal, nDistinct, nNulls) =
+        (us.head.getLong(1), us.head.getLong(2), us.head.getLong(3))
+      val affNames = as.toSeq.map(_.getString(0))
       require(nTotal == nDistinct + math.min(nNulls, 1L),
         s"mergeInto: source is not unique on `$key`")
       val affectedAbs = affNames.map(fsPathOf).toSet
@@ -5067,43 +5056,23 @@ object Layout {
               //                            is unique, so no fan-out)
               // NULL-keyed old rows never match (SQL join semantics)
               // and carry, exactly as the anti-join carried them.
-              // Source columns ride under a reserved prefix; a user
-              // schema that collides falls back to the two-join form
-              // (same result set — the fusion is an optimization).
-              val pfx = "__graft_ms_"
-              // conf-dispatched (spark.graft.merge.fusedcow, default
-              // on) so both forms stay A/B-able; MergeFusionSpec pins
-              // result equality
-              val safe = spark.conf
-                .getOption("spark.graft.merge.fusedcow")
-                .forall(_ == "true") &&
-                !tcols.exists(_.startsWith(pfx)) &&
-                !src.columns.exists(_.startsWith(pfx))
-              if (safe) {
-                val marker = deleteWhen.fold(lit(false))(c =>
-                  coalesce(c, lit(false)))
-                val srcSide = src.select(
-                  col(key).as(s"${pfx}k") +:
-                    (tcols.filterNot(_ == key)
-                      .map(c => col(c).as(s"$pfx$c")) :+
-                      marker.as(s"${pfx}del")): _*)
-                old.join(srcSide,
-                    old(key) === srcSide(s"${pfx}k"), "left_outer")
-                  .where(col(s"${pfx}k").isNull || !col(s"${pfx}del"))
-                  .select(tcols.map { c =>
-                    if (c == key) col(key)
-                    else when(col(s"${pfx}k").isNotNull, col(s"$pfx$c"))
-                      .otherwise(col(c)).as(c)
-                  }: _*)
-                  .unionByName(insertsObs)
-              } else {
-                val carried =
-                  old.join(src.select(col(key)), Seq(key), "left_anti")
-                val updated = old.select(col(key))
-                  .join(upSrc, Seq(key), "inner")
-                  .select(tcols.map(col): _*)
-                carried.unionByName(updated).unionByName(insertsObs)
-              }
+              // The two sides are qualified by Dataset alias, so no
+              // table or source column name can collide; the marker
+              // only needs a name no table column has.
+              val del = Iterator.iterate("del")("_" + _)
+                .find(n => !tcols.exists(_.equalsIgnoreCase(n))).get
+              val marker = deleteWhen.fold(lit(false))(c =>
+                coalesce(c, lit(false)))
+              val srcSide = src.select(tcols.map(col) :+ marker.as(del): _*)
+              old.as("o").join(srcSide.as("s"),
+                  col(s"o.$key") === col(s"s.$key"), "left_outer")
+                .where(col(s"s.$key").isNull || !col(s"s.$del"))
+                .select(tcols.map { c =>
+                  if (c == key) col(s"o.$key").as(key)
+                  else when(col(s"s.$key").isNotNull, col(s"s.$c"))
+                    .otherwise(col(s"o.$c")).as(c)
+                }: _*)
+                .unionByName(insertsObs)
             }
           // rewritten + inserted files keep the table's recorded
           // bounds, as in deleteWhere; a rewrite keeping ZERO rows

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables._
@@ -63,52 +63,36 @@ object QualitySignals {
     * them exactly; output carries the match counts plus the fingerprint
     * of the scrubbed text, not the text itself. */
   def qPiiScrub(s: SparkSession, d: String): DataFrame = {
+    // r22, guide §1.2: one fused kernel instead of six regex expressions
+    // per row, each re-decoding the same augmented UTF8String; the
+    // kernel decodes once and fuses the email count+replace pass (see
+    // functions/PiiScrub.scala). PiiScrubKernelSpec pins it against the
+    // six-expression form.
     val emailRe = "[a-z0-9._%+-]+@[a-z0-9.-]+\\.[a-z]{2,}"
     val ipRe = "\\b\\d{1,3}\\.\\d{1,3}\\.\\d{1,3}\\.\\d{1,3}\\b"
     val phoneRe = "\\b\\d{3}-\\d{4}\\b"
-    val aug = concat(col("text"),
+    val pii = graft.functions.PiiScrub
+      .piiScrub(piiAugmented, emailRe, ipRe, phoneRe)
+    documents(s, d).select(col("doc_id"), pii.as("p"))
+      .select(
+        col("doc_id"),
+        col("p.n_email").as("n_email"),
+        col("p.n_ip").as("n_ip"),
+        col("p.n_phone").as("n_phone"),
+        length(col("p.scrubbed")).cast("long").as("n_scrub"),
+        md5(col("p.scrubbed")).as("scrub_fp"))
+      .orderBy("doc_id")
+  }
+
+  /** The `q_pii_scrub` input: a document's text followed by synthetic
+    * contact strings derived from its `doc_id`. */
+  private[graft] def piiAugmented: Column =
+    concat(col("text"),
       lit(" contact user"), col("doc_id").cast("string"),
       lit("@mail.example.com via 10.0."),
       (col("doc_id") % 256).cast("string"), lit("."),
       (col("doc_id") % 100).cast("string"), lit(" or call 555-01"),
       lpad((col("doc_id") % 100).cast("string"), 2, "0"))
-    // conf-dispatched (spark.graft.pii.fused, default on) so both forms
-    // stay A/B-able; the fused kernel is output-identical by
-    // PiiScrubKernelSpec. r22, guide §1.2: the unfused form ran SIX
-    // regex expressions per row, each re-decoding the same augmented
-    // UTF8String; the kernel decodes once and fuses the email
-    // count+replace pass (see functions/PiiScrub.scala).
-    if (s.conf.getOption("spark.graft.pii.fused").forall(_ == "true")) {
-      val pii = graft.functions.PiiScrub
-        .piiScrub(aug, emailRe, ipRe, phoneRe)
-      documents(s, d).select(col("doc_id"), pii.as("p"))
-        .select(
-          col("doc_id"),
-          col("p.n_email").as("n_email"),
-          col("p.n_ip").as("n_ip"),
-          col("p.n_phone").as("n_phone"),
-          length(col("p.scrubbed")).cast("long").as("n_scrub"),
-          md5(col("p.scrubbed")).as("scrub_fp"))
-        .orderBy("doc_id")
-    } else {
-      val scrubbed = regexp_replace(
-        regexp_replace(
-          regexp_replace(aug, emailRe, "<EMAIL>"),
-          ipRe, "<IP>"),
-        phoneRe, "<PHONE>")
-      documents(s, d).select(
-        col("doc_id"),
-        size(regexp_extract_all(aug, lit(emailRe), lit(0)))
-          .cast("long").as("n_email"),
-        size(regexp_extract_all(aug, lit(ipRe), lit(0)))
-          .cast("long").as("n_ip"),
-        size(regexp_extract_all(aug, lit(phoneRe), lit(0)))
-          .cast("long").as("n_phone"),
-        length(scrubbed).cast("long").as("n_scrub"),
-        md5(scrubbed).as("scrub_fp"))
-        .orderBy("doc_id")
-    }
-  }
 
   /** Unigram surprisal — the model-free perplexity surrogate used to
     * rank corpus quality: mean −ln(p(token)) per document under the

@@ -277,8 +277,6 @@ object Sketches {
     // min-fixpoint, so join strategy/partitioning cannot change the
     // result (LabelPropagationSpec + the shared dedup oracles pin it).
     val sess = pairs.sparkSession
-    val localOn = sess.conf
-      .get("spark.graft.labelprop.localplan", "true") == "true"
     val localBytes = sess.conf
       .get("spark.graft.labelprop.localBytes", (64L << 20).toString).toLong
     var smallGraph = false
@@ -317,7 +315,7 @@ object Sketches {
       val changed =
         if (smallGraph) Layout.controlPlane(sess, Some(4))(convergenceCount())
         else convergenceCount()
-      if (localOn && iter == 0)
+      if (iter == 0)
         // after round 0 the edge cache is materialized, so its plan
         // stats are the exact cached bytes — dispatch for the REMAINING
         // rounds on what the graph actually weighs, never an estimate
@@ -327,9 +325,7 @@ object Sketches {
       prevCached = next
       labels = next.select(col("id"), col("lbl"))
       converged = changed == 0
-      val jumpOn = pairs.sparkSession.conf
-        .get("spark.graft.labelprop.jump", "true") == "true"
-      if (!converged && iter >= 2 && jumpOn) {
+      if (!converged && iter >= 2) {
         // pointer jump (see scaladoc): every lbl value is itself a node id
         // present in `labels`, so the inner self-join is total. The right
         // side renames its columns so the self-join cannot hit Spark's

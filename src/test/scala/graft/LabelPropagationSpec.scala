@@ -17,14 +17,17 @@ class LabelPropagationSpec extends AnyFunSuite {
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
-  test("deep chain converges and lineage stays bounded") {
+  /** A 25-node chain (diameter 24: min label needs ~24 rounds to reach
+    * the far end) plus a disjoint triangle. */
+  private def chainPlusTriangle = {
     import spark.implicits._
-    // A 25-node chain (diameter 24: min label needs ~24 rounds to reach
-    // the far end) plus a disjoint triangle.
     val chain = (0L until 24L).map(i => (i, i + 1))
     val tri = Seq((100L, 101L), (101L, 102L))
-    val pairs = (chain ++ tri).toDF("da", "db")
-    val labels = ops.Sketches.labelPropagation(pairs, maxIter = 40)
+    (chain ++ tri).toDF("da", "db")
+  }
+
+  test("deep chain converges and lineage stays bounded") {
+    val labels = ops.Sketches.labelPropagation(chainPlusTriangle, maxIter = 40)
     val got = labels.collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     (0L to 24L).foreach(i => assert(got(i) == 0L, s"node $i"))
     Seq(100L, 101L, 102L).foreach(i => assert(got(i) == 100L, s"node $i"))
@@ -41,5 +44,33 @@ class LabelPropagationSpec extends AnyFunSuite {
     val planLines = labels.queryExecution.optimizedPlan.treeString.linesIterator.size
     assert(planLines < 120, s"optimized plan has $planLines lines — lineage not truncated")
     labels.unpersist()
+  }
+
+  test("both sides of the labelprop.localBytes ceiling agree") {
+    val pairs = chainPlusTriangle
+    JobGroupCounter.withCounter(spark) { jobs =>
+      def run(group: String): (Map[Long, Long], Int) = jobs.inGroup(group) {
+        val got = ops.Sketches.labelPropagation(pairs, maxIter = 40)
+          .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
+        (got, ops.Sketches.lastLabelPropIterations)
+      }
+      // default ceiling: the kilobyte graph runs its rounds in the
+      // local plan, one scheduled job per round
+      val (local, localRounds) = run("local")
+      // a zero ceiling keeps every round on the adaptive plan
+      spark.conf.set("spark.graft.labelprop.localBytes", "0")
+      val (dist, distRounds) =
+        try run("adaptive")
+        finally spark.conf.unset("spark.graft.labelprop.localBytes")
+      assert(local.size == 28 &&
+        local.forall { case (id, l) => l == (if (id >= 100) 100L else 0L) })
+      assert(local == dist)
+      assert(localRounds == distRounds)
+      assert(localRounds <= 9, s"$localRounds rounds")
+      assert(jobs("local") < jobs("adaptive"),
+        s"jobs local=${jobs("local")} adaptive=${jobs("adaptive")}" +
+          " — the two sides of the ceiling ran the same plan")
+    }
+    ops.Sketches.clearLabelPropCache()
   }
 }

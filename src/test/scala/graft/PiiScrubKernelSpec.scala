@@ -1,15 +1,15 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The r22 fused PII kernel (functions/PiiScrub.scala) must be
-  * output-identical to the six unfused Spark regex expressions it
-  * replaces — counts over the ORIGINAL augmented text, sequential
-  * email → ip → phone replace chain — because the conf dispatch that
-  * picks it is a pure cost decision. Pinned at kernel level on
-  * adversarial strings and at operator level on testdata. */
+  * output-identical to the six Spark regex expressions it replaced —
+  * counts over the ORIGINAL augmented text, sequential email → ip →
+  * phone replace chain. That six-expression form lives here as the
+  * reference, pinned at kernel level on adversarial strings and at
+  * operator level on testdata. */
 class PiiScrubKernelSpec extends AnyFunSuite {
 
   lazy val spark: SparkSession = SparkSession.builder()
@@ -22,6 +22,22 @@ class PiiScrubKernelSpec extends AnyFunSuite {
   private val emailRe = "[a-z0-9._%+-]+@[a-z0-9.-]+\\.[a-z]{2,}"
   private val ipRe = "\\b\\d{1,3}\\.\\d{1,3}\\.\\d{1,3}\\.\\d{1,3}\\b"
   private val phoneRe = "\\b\\d{3}-\\d{4}\\b"
+
+  /** The six-expression reference over `aug`: three match counts on
+    * the original text and the email → ip → phone replace chain. */
+  private def unfused(aug: Column): Seq[Column] = {
+    val scrubbed = regexp_replace(regexp_replace(
+      regexp_replace(aug, emailRe, "<EMAIL>"),
+      ipRe, "<IP>"), phoneRe, "<PHONE>")
+    Seq(
+      size(regexp_extract_all(aug, lit(emailRe), lit(0)))
+        .cast("long").as("n_email"),
+      size(regexp_extract_all(aug, lit(ipRe), lit(0)))
+        .cast("long").as("n_ip"),
+      size(regexp_extract_all(aug, lit(phoneRe), lit(0)))
+        .cast("long").as("n_phone"),
+      scrubbed.as("scrubbed"))
+  }
 
   test("kernel == unfused expressions on adversarial strings") {
     import spark.implicits._
@@ -49,34 +65,25 @@ class PiiScrubKernelSpec extends AnyFunSuite {
           .piiScrub(col("aug"), emailRe, ipRe, phoneRe).as("p"))
       .select(col("doc_id"), col("p.n_email"), col("p.n_ip"),
         col("p.n_phone"), col("p.scrubbed"))
-    val scrubbed = regexp_replace(regexp_replace(
-      regexp_replace(col("aug"), emailRe, "<EMAIL>"),
-      ipRe, "<IP>"), phoneRe, "<PHONE>")
-    val unfused = df.select(col("doc_id"),
-      size(regexp_extract_all(col("aug"), lit(emailRe), lit(0)))
-        .cast("long").as("n_email"),
-      size(regexp_extract_all(col("aug"), lit(ipRe), lit(0)))
-        .cast("long").as("n_ip"),
-      size(regexp_extract_all(col("aug"), lit(phoneRe), lit(0)))
-        .cast("long").as("n_phone"),
-      scrubbed.as("scrubbed"))
+    val reference = df.select(col("doc_id") +: unfused(col("aug")): _*)
     assert(fused.orderBy("doc_id").collect().toSeq ==
-      unfused.orderBy("doc_id").collect().toSeq)
+      reference.orderBy("doc_id").collect().toSeq)
   }
 
   test("q_pii_scrub: fused == unfused on sf0.001, and fused is deployed") {
     val d = "/root/testdata/sf0.001"
-    val fused =
-      ops.QualitySignals.qPiiScrub(spark, d).collect().toSeq
-    spark.conf.set("spark.graft.pii.fused", "false")
-    val unfused =
-      try ops.QualitySignals.qPiiScrub(spark, d).collect().toSeq
-      finally spark.conf.unset("spark.graft.pii.fused")
-    assert(fused == unfused)
+    val q = ops.QualitySignals.qPiiScrub(spark, d)
+    val fused = q.collect().toSeq
+    val reference = Tables.documents(spark, d)
+      .select(col("doc_id") +: unfused(ops.QualitySignals.piiAugmented): _*)
+      .select(col("doc_id"), col("n_email"), col("n_ip"), col("n_phone"),
+        length(col("scrubbed")).cast("long").as("n_scrub"),
+        md5(col("scrubbed")).as("scrub_fp"))
+      .orderBy("doc_id").collect().toSeq
+    assert(fused == reference)
     assert(fused.nonEmpty)
     // the deployed plan actually runs the kernel (not silently unfused)
-    val plan = ops.QualitySignals.qPiiScrub(spark, d)
-      .queryExecution.executedPlan.toString
+    val plan = q.queryExecution.executedPlan.toString
     assert(plan.contains("graft_pii_scrub"), plan.take(800))
   }
 }
